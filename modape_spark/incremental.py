@@ -13,9 +13,12 @@ run (SURVEY.md §2.8) on DataFrames:
   (smooth.py:305,336-352; io.py:108-122,189-202)
 
 Batch table shape (FIXTURES.md §4): ``(doc_id, batch_id, proc_ts,
-tokens_suffix array<int>, start_offset int)`` where start_offset is the
+tokens_suffix array<smallint>, start_offset int)`` where start_offset is the
 position in the full series at which the suffix begins (the date-axis
 watermark in positional form — position k <-> a julian date, grids.py).
+``tokens_suffix`` has the raw table's smallint element type; an
+``array<int>`` batch is accepted, and ``concat``'s type coercion then widens
+the appended ``tokens`` to ``array<int>``.
 """
 
 from __future__ import annotations
@@ -153,9 +156,10 @@ def append_suffixes(raw_df: DataFrame, batches: DataFrame,
     # next query; plain library callers just hold a small cached DF.
     try:
         from .entry_queries import _track_cache
-        b = _track_cache(b)
-    except Exception:
+    except ImportError:
         pass
+    else:
+        b = _track_cache(b)
     if validate:
         validate_append(raw_df, b)
     b = b.select("doc_id", F.col("tokens_suffix"))

@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark", "host_cores", "host_driver_memory", "stop_spark"]
 
 # One Arrow batch ≈ one kernel block.  Measured across concurrency levels
 # (BENCH/BASELINE.md): at 128 rows x 742 pts the batched numpy matrices
@@ -38,17 +38,46 @@ def _tune_malloc_env() -> None:
     os.environ.setdefault("MALLOC_MMAP_MAX_", "0")
 
 
+def host_cores() -> int:
+    """CPUs this process may run on (its affinity mask, not the machine's
+    count: a container or ``taskset`` may grant fewer)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def host_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """A quarter of the host's RAM, at least 1 GiB (Spark's own default).
+
+    A quarter is the JVM's default max-heap share; the rest stays for the
+    Python workers, which local mode runs on the same host.  Falls back to
+    ``1g`` where ``meminfo`` is unreadable.
+    """
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, IndexError, ValueError):
+        return "1g"
+    return f"{max(1024, kib // 4 // 1024)}m"
+
+
 def get_spark(
     app_name: str = "modape-spark",
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "32g",
+    driver_memory: str | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """Local session on ``cores`` threads (default ``$SPARK_GRAFT_CPUS``,
+    else ``host_cores()``) with ``driver_memory`` of heap (default
+    ``host_driver_memory()``)."""
     _tune_malloc_env()
     if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cores = os.environ.get("SPARK_GRAFT_CPUS") or host_cores()
     cores = int(cores)
+    if driver_memory is None:
+        driver_memory = host_driver_memory()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     extra_conf = dict(extra_conf or {})

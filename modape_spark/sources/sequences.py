@@ -18,14 +18,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..fixtures import gen_tokens_block, local_sequences, row_lengths, row_sources
 
-# tokens are smallint: the value domain is the sensor range [-3000, 10000]
-# (fixtures.gen_tokens_block clips there), so int16 holds every value
-# exactly.  Half-width tokens halve the JVM->Python Arrow feed of every
-# kernel pass — the headline's measured fixed feed cost dropped ~2x in a
-# feed-only A/B (1.95 s -> 0.92 s warm at 100k rows) — while parquet size
-# is unchanged (bit-packed either way).  Kernel math is unaffected: the
-# kernel widens to float64 on entry (tiers._rollup_core), and SQL
-# aggregates over tokens accumulate in bigint as before.
+# tokens are smallint: values lie in the VIM valid range [-2000, 10000]
+# (fixtures.gen_tokens_block clips there) plus the -3000 nodata sentinel,
+# so int16 holds every value exactly.  Half-width tokens halve the
+# JVM->Python Arrow feed of every kernel pass — the headline's measured
+# fixed feed cost dropped ~2x in a feed-only A/B (1.95 s -> 0.92 s warm
+# at 100k rows) — while parquet size is unchanged (bit-packed either
+# way).  Kernel math is unaffected: the kernel widens to float64 on entry
+# (tiers._rollup_core), and SQL aggregates over tokens accumulate in
+# bigint as before.
 SEQUENCES_SCHEMA = ("doc_id string, tokens array<smallint>, n_tok int, "
                     "source string")
 
