@@ -2,18 +2,21 @@
 
 The numpy batched kernel (kernels.py) dispatches ~16 numpy ops per
 time-step; at n=742 that is ~12k dispatches per solve and the kernel
-becomes dispatch/memory bound.  This module compiles a tiny C row-solver at
+becomes dispatch/memory bound.  This module compiles a small C library at
 first use (gcc is present in the image; nothing is installed) and loads it
 with ctypes.  The C code executes the IDENTICAL per-element operation
-sequence as kernels.ws2d_batch / _envelope_iterate — compiled with
-``-fno-fast-math -ffp-contract=off`` so every double op rounds exactly like
-numpy's — and tests/test_ckernel.py asserts bit-equality between the two
-paths.  If compilation fails for any reason the engine silently keeps the
-pure-numpy path.
+sequence as kernels.ws2d_batch / _envelope_iterate / the V-curve fit and
+penalty sums — compiled with ``-fno-fast-math -ffp-contract=off`` so every
+double op rounds exactly like numpy's — and tests/test_ckernel.py asserts
+bit-equality between the two paths.  If compilation fails for any reason
+the engine silently keeps the pure-numpy path.
 
-Row-major layout: each row's working set (y, w, d, c, e, z ~ 36 KiB at
-n=742) is L1/L2-resident, so the C path also slashes memory traffic —
-the property the multi-worker scaling depends on.
+Layout: rows are solved in blocks of 8, transposed to time-major so each
+recurrence step is one packed op across the block's rows (GCC vector
+types).  A block's working set (~9 planes of n x 8 doubles, ~430 KiB at
+n=742) stays cache-resident for a row's whole lambda sweep
+(``vcurve_sweep``: every grid lambda, the envelope loop and the fit and
+penalty sums in one call per batch).
 """
 
 from __future__ import annotations
@@ -116,79 +119,144 @@ void envelope_rows(const double* Y, const double* lam, const double* W,
 
 /* --- blocked (row-interleaved) solver forms ---------------------------
    Lanes of MODAPE_BS rows run the IDENTICAL per-row operation sequence
-   side by side in a transposed (time-major) layout, so the compiler
-   auto-vectorizes the recurrence ACROSS rows — the time recurrence is
-   sequential per row, but rows are independent, and the scalar form left
-   the divide units idle waiting on each step's division latency.
+   side by side in a transposed (time-major) layout.  Each time step is a
+   handful of packed ops on a GCC vector of MODAPE_BS doubles: the time
+   recurrence is sequential per row, but rows are independent, so one
+   packed divide serves the whole block.  (gcc does not auto-vectorize
+   the same loops written over plain double arrays: it cannot prove the
+   lane pointers don't alias, and the divides stay scalar.)
    Per-lane results are bit-identical to ws2d_row/envelope_rows: the same
    IEEE add/mul/div sequence per row (no reassociation, and the build pins
-   -ffp-contract=off so no FMA merging), and SIMD lanes round exactly like
-   scalar ops.  Pad lanes (block tail past R) run on benign inputs
-   (y=0, w=1, lam=1) and are discarded. */
+   -ffp-contract=off so no FMA merging), and packed add/mul/div round
+   exactly like their scalar forms.  Pad lanes (block tail past R) run on
+   benign inputs (y=0, w=1, lam=1) and are discarded. */
 #define MODAPE_BS 8
+typedef double vd __attribute__((vector_size(MODAPE_BS * sizeof(double))));
+typedef long long vl __attribute__((vector_size(MODAPE_BS * sizeof(long long))));
 
-static void ws2d_block(const double* yt, const double* lamv,
-                       const double* wt, double* zt,
-                       double* wd, double* wc, double* we, long n)
+static vd* alloc_planes(long n, int k)
 {
-    enum { BS = MODAPE_BS };
-    long m = n - 1, i; int j;
-    double lam2n[BS], lam4n[BS], lam5[BS], lam6[BS];
-    for (j = 0; j < BS; j++) {
-        lam2n[j] = -2.0 * lamv[j]; lam4n[j] = -4.0 * lamv[j];
-        lam5[j] = 5.0 * lamv[j];   lam6[j] = 6.0 * lamv[j];
+    void* p = 0;
+    if (posix_memalign(&p, sizeof(vd), (size_t)n * k * sizeof(vd)) != 0)
+        return 0;
+    return (vd*)p;
+}
+
+/* rows r0..r0+B-1 of the row-major (R x n) X into time-major xt */
+static void load_block(const double* X, long r0, int B, long n,
+                       double pad, vd* xt)
+{
+    long i; int j;
+    for (i = 0; i < n; i++) {
+        for (j = 0; j < B; j++) xt[i][j] = X[(r0 + j) * n + i];
+        for (j = B; j < MODAPE_BS; j++) xt[i][j] = pad;
     }
+}
+
+static void store_block(const vd* xt, long r0, int B, long n, double* X)
+{
+    long i; int j;
     for (i = 0; i < n; i++)
-        for (j = 0; j < BS; j++)
-            zt[i*BS+j] = wt[i*BS+j] * yt[i*BS+j];
-    for (j = 0; j < BS; j++) {
-        wd[0*BS+j] = wt[0*BS+j] + lamv[j];
-        wc[0*BS+j] = lam2n[j] / wd[0*BS+j];
-        we[0*BS+j] = lamv[j] / wd[0*BS+j];
-        wd[1*BS+j] = wt[1*BS+j] + lam5[j] - wd[0*BS+j] * (wc[0*BS+j] * wc[0*BS+j]);
-        wc[1*BS+j] = (lam4n[j] - wd[0*BS+j] * wc[0*BS+j] * we[0*BS+j]) / wd[1*BS+j];
-        we[1*BS+j] = lamv[j] / wd[1*BS+j];
-        zt[1*BS+j] -= wc[0*BS+j] * zt[0*BS+j];
-    }
+        for (j = 0; j < B; j++) X[(r0 + j) * n + i] = xt[i][j];
+}
+
+static vd splat(double x)
+{
+    vd v; int j;
+    for (j = 0; j < MODAPE_BS; j++) v[j] = x;
+    return v;
+}
+
+static vd lam_block(const double* lam, long r0, int B)
+{
+    vd v; int j;
+    for (j = 0; j < MODAPE_BS; j++) v[j] = j < B ? lam[r0 + j] : 1.0;
+    return v;
+}
+
+static int any_lane(vl v)
+{
+    int j;
+    for (j = 0; j < MODAPE_BS; j++)
+        if (v[j]) return 1;
+    return 0;
+}
+
+/* ws2d_row on MODAPE_BS lanes at once: the same statements over vectors */
+static void ws2d_block(const vd* restrict yt, vd lam, const vd* restrict wt,
+                       vd* restrict zt, vd* restrict wd, vd* restrict wc,
+                       vd* restrict we, long n)
+{
+    long m = n - 1, i;
+    vd lam2n = -2.0 * lam, lam4n = -4.0 * lam;
+    vd lam5 = 5.0 * lam, lam6 = 6.0 * lam;
+
+    for (i = 0; i < n; i++) zt[i] = wt[i] * yt[i];
+
+    wd[0] = wt[0] + lam;
+    wc[0] = lam2n / wd[0];
+    we[0] = lam / wd[0];
+    wd[1] = wt[1] + lam5 - wd[0] * (wc[0] * wc[0]);
+    wc[1] = (lam4n - wd[0] * wc[0] * we[0]) / wd[1];
+    we[1] = lam / wd[1];
+    zt[1] -= wc[0] * zt[0];
     for (i = 2; i < m - 1; i++) {
-        const double* wci1 = wc + (i-1)*BS; const double* wei2 = we + (i-2)*BS;
-        const double* wdi1 = wd + (i-1)*BS; const double* wdi2 = wd + (i-2)*BS;
-        const double* wei1 = we + (i-1)*BS;
-        double* wdi = wd + i*BS; double* wci = wc + i*BS; double* wei = we + i*BS;
-        double* zi = zt + i*BS;
-        const double* zi1 = zt + (i-1)*BS; const double* zi2 = zt + (i-2)*BS;
-        const double* wi = wt + i*BS;
-        for (j = 0; j < BS; j++) {
-            wdi[j] = wi[j] + lam6[j] - (wci1[j] * wci1[j]) * wdi1[j]
-                                     - (wei2[j] * wei2[j]) * wdi2[j];
-            wci[j] = (lam4n[j] - wdi1[j] * wci1[j] * wei1[j]) / wdi[j];
-            wei[j] = lamv[j] / wdi[j];
-            zi[j] -= wci1[j] * zi1[j];
-            zi[j] -= wei2[j] * zi2[j];
+        wd[i] = wt[i] + lam6 - (wc[i-1] * wc[i-1]) * wd[i-1] - (we[i-2] * we[i-2]) * wd[i-2];
+        wc[i] = (lam4n - wd[i-1] * wc[i-1] * we[i-1]) / wd[i];
+        we[i] = lam / wd[i];
+        zt[i] -= wc[i-1] * zt[i-1];
+        zt[i] -= we[i-2] * zt[i-2];
+    }
+    wd[m-1] = wt[m-1] + lam5 - (wc[m-2] * wc[m-2]) * wd[m-2] - (we[m-3] * we[m-3]) * wd[m-3];
+    wc[m-1] = (lam2n - wd[m-2] * wc[m-2] * we[m-2]) / wd[m-1];
+    zt[m-1] -= wc[m-2] * zt[m-2];
+    zt[m-1] -= we[m-3] * zt[m-3];
+    wd[m] = wt[m] + lam - (wc[m-1] * wc[m-1]) * wd[m-1] - (we[m-2] * we[m-2]) * wd[m-2];
+    zt[m] = (zt[m] - wc[m-1] * zt[m-1] - we[m-2] * zt[m-2]) / wd[m];
+    zt[m-1] = zt[m-1] / wd[m-1] - wc[m-1] * zt[m];
+    for (i = m - 2; i >= 0; i--)
+        zt[i] = zt[i] / wd[i] - wc[i] * zt[i+1] - we[i] * zt[i+2];
+}
+
+/* Asymmetric-envelope loop on one block, per lane exactly envelope_rows:
+   wa = p if y > z else 1-p; ww = w*wa; znew = solve; stop when
+   sum|znew - z| == 0, i.e. when every znew[i] - z[i] == 0 (z then keeps
+   its pre-iteration value, ww the stopping iteration's weights).  Only
+   lanes j < B run; converged lanes ride the block's remaining solves
+   with their results discarded.
+   The confirming solve is skipped: from iteration 1 on, each active
+   lane's z IS the solve with its current ww, so when no active lane's
+   new weights differ bit for bit from its old ones, the solve would
+   return z exactly and every lane whose z is finite would stop.  A lane
+   with a non-finite z never stops (its delta is NaN), so it forces the
+   solve and keeps envelope_rows' 10-iteration behaviour. */
+static void envelope_block(const vd* yt, const vd* wt, vd lam, double p,
+                           vd* zt, vd* wwt, vd* znt, vd* wd, vd* wc,
+                           vd* we, long n, int B)
+{
+    const vd pv = splat(p), p1v = splat(1.0 - p), zero = splat(0.0);
+    const vl expo = (vl)splat(INFINITY);  /* exponent bits all ones */
+    vl active;
+    long i; int j, it;
+    for (j = 0; j < MODAPE_BS; j++) active[j] = j < B ? -1 : 0;
+    for (it = 0; it < 10 && any_lane(active); it++) {
+        vl changed = (vl){0}, nonfinite = (vl){0}, moved = (vl){0};
+        for (i = 0; i < n; i++) {
+            vl gt = yt[i] > zt[i];
+            vl wnew = (vl)(wt[i] * (vd)((gt & (vl)pv) | (~gt & (vl)p1v)));
+            vl wold = (vl)wwt[i];
+            changed |= wnew ^ wold;
+            nonfinite |= ((vl)zt[i] & expo) == expo;
+            wwt[i] = (vd)((active & wnew) | (~active & wold));
         }
-    }
-    for (j = 0; j < BS; j++) {
-        wd[(m-1)*BS+j] = wt[(m-1)*BS+j] + lam5[j]
-            - (wc[(m-2)*BS+j] * wc[(m-2)*BS+j]) * wd[(m-2)*BS+j]
-            - (we[(m-3)*BS+j] * we[(m-3)*BS+j]) * wd[(m-3)*BS+j];
-        wc[(m-1)*BS+j] = (lam2n[j] - wd[(m-2)*BS+j] * wc[(m-2)*BS+j] * we[(m-2)*BS+j])
-                         / wd[(m-1)*BS+j];
-        zt[(m-1)*BS+j] -= wc[(m-2)*BS+j] * zt[(m-2)*BS+j];
-        zt[(m-1)*BS+j] -= we[(m-3)*BS+j] * zt[(m-3)*BS+j];
-        wd[m*BS+j] = wt[m*BS+j] + lamv[j]
-            - (wc[(m-1)*BS+j] * wc[(m-1)*BS+j]) * wd[(m-1)*BS+j]
-            - (we[(m-2)*BS+j] * we[(m-2)*BS+j]) * wd[(m-2)*BS+j];
-        zt[m*BS+j] = (zt[m*BS+j] - wc[(m-1)*BS+j] * zt[(m-1)*BS+j]
-                      - we[(m-2)*BS+j] * zt[(m-2)*BS+j]) / wd[m*BS+j];
-        zt[(m-1)*BS+j] = zt[(m-1)*BS+j] / wd[(m-1)*BS+j] - wc[(m-1)*BS+j] * zt[m*BS+j];
-    }
-    for (i = m - 2; i >= 0; i--) {
-        double* zi = zt + i*BS;
-        const double* zi1 = zt + (i+1)*BS; const double* zi2 = zt + (i+2)*BS;
-        const double* wdi = wd + i*BS; const double* wci = wc + i*BS;
-        const double* wei = we + i*BS;
-        for (j = 0; j < BS; j++)
-            zi[j] = zi[j] / wdi[j] - wci[j] * zi1[j] - wei[j] * zi2[j];
+        if (it > 0 && !any_lane(active & (changed | nonfinite)))
+            break;
+        ws2d_block(yt, lam, wwt, znt, wd, wc, we, n);
+        for (i = 0; i < n; i++)
+            moved |= ~(znt[i] - zt[i] == zero);
+        active &= moved;
+        for (i = 0; i < n; i++)
+            zt[i] = (vd)((active & (vl)znt[i]) | (~active & (vl)zt[i]));
     }
 }
 
@@ -197,97 +265,164 @@ static void ws2d_block(const double* yt, const double* lamv,
 long ws2d_rows_blk(const double* Y, const double* lam, const double* W,
                    double* Z, long n, long R)
 {
-    enum { BS = MODAPE_BS };
-    size_t plane = (size_t)n * BS;
-    double* buf = (double*)malloc(plane * 6 * sizeof(double));
-    double lamv[BS];
-    long r0, i; int j;
+    vd* buf = alloc_planes(n, 6);
+    long r0;
     if (!buf) return -1;
     {
-        double* yt = buf;            double* wt = buf + plane;
-        double* zt = buf + 2*plane;  double* wd = buf + 3*plane;
-        double* wc = buf + 4*plane;  double* we = buf + 5*plane;
-        for (r0 = 0; r0 < R; r0 += BS) {
-            int B = (int)((R - r0 < BS) ? (R - r0) : BS);
-            for (j = 0; j < B; j++) lamv[j] = lam[r0+j];
-            for (j = B; j < BS; j++) lamv[j] = 1.0;
-            for (i = 0; i < n; i++) {
-                for (j = 0; j < B; j++) {
-                    yt[i*BS+j] = Y[(r0+j)*n + i];
-                    wt[i*BS+j] = W[(r0+j)*n + i];
-                }
-                for (j = B; j < BS; j++) { yt[i*BS+j] = 0.0; wt[i*BS+j] = 1.0; }
-            }
-            ws2d_block(yt, lamv, wt, zt, wd, wc, we, n);
-            for (i = 0; i < n; i++)
-                for (j = 0; j < B; j++)
-                    Z[(r0+j)*n + i] = zt[i*BS+j];
+        vd* yt = buf;          vd* wt = buf + n;
+        vd* zt = buf + 2 * n;  vd* wd = buf + 3 * n;
+        vd* wc = buf + 4 * n;  vd* we = buf + 5 * n;
+        for (r0 = 0; r0 < R; r0 += MODAPE_BS) {
+            int B = (int)((R - r0 < MODAPE_BS) ? (R - r0) : MODAPE_BS);
+            load_block(Y, r0, B, n, 0.0, yt);
+            load_block(W, r0, B, n, 1.0, wt);
+            ws2d_block(yt, lam_block(lam, r0, B), wt, zt, wd, wc, we, n);
+            store_block(zt, r0, B, n, Z);
         }
     }
     free(buf);
     return 0;
 }
 
-/* Blocked asymmetric-envelope loop: identical per-lane semantics to
-   envelope_rows (per-row exact early exit; converged lanes stop
-   updating z/ww but keep riding the block's remaining solves with their
-   results discarded).  Returns 0 ok, -1 on alloc failure. */
+/* Blocked asymmetric-envelope loop: identical per-lane results to
+   envelope_rows (z in/out, ww out).  Returns 0 ok, -1 on alloc
+   failure. */
 long envelope_rows_blk(const double* Y, const double* lam, const double* W,
                        double p, double* z, double* ww, long n, long R)
 {
-    enum { BS = MODAPE_BS };
-    double p1 = 1.0 - p;
-    size_t plane = (size_t)n * BS;
-    double* buf = (double*)malloc(plane * 8 * sizeof(double));
-    double lamv[BS]; int active[BS];
-    long r0, i; int j, it;
+    vd* buf = alloc_planes(n, 8);
+    long r0;
     if (!buf) return -1;
     {
-        double* yt  = buf;            double* wt  = buf + plane;
-        double* zt  = buf + 2*plane;  double* wwt = buf + 3*plane;
-        double* wd  = buf + 4*plane;  double* wc  = buf + 5*plane;
-        double* we  = buf + 6*plane;  double* znt = buf + 7*plane;
-        for (r0 = 0; r0 < R; r0 += BS) {
-            int B = (int)((R - r0 < BS) ? (R - r0) : BS);
-            int n_active = B;
-            for (j = 0; j < B; j++) { lamv[j] = lam[r0+j]; active[j] = 1; }
-            for (j = B; j < BS; j++) { lamv[j] = 1.0; active[j] = 0; }
+        vd* yt  = buf;          vd* wt  = buf + n;
+        vd* zt  = buf + 2 * n;  vd* wwt = buf + 3 * n;
+        vd* wd  = buf + 4 * n;  vd* wc  = buf + 5 * n;
+        vd* we  = buf + 6 * n;  vd* znt = buf + 7 * n;
+        for (r0 = 0; r0 < R; r0 += MODAPE_BS) {
+            int B = (int)((R - r0 < MODAPE_BS) ? (R - r0) : MODAPE_BS);
+            long i;
+            load_block(Y, r0, B, n, 0.0, yt);
+            load_block(W, r0, B, n, 1.0, wt);
+            load_block(z, r0, B, n, 0.0, zt);
+            for (i = 0; i < n; i++) wwt[i] = splat(1.0);
+            envelope_block(yt, wt, lam_block(lam, r0, B), p, zt, wwt, znt,
+                           wd, wc, we, n, B);
+            store_block(zt, r0, B, n, z);
+            store_block(wwt, r0, B, n, ww);
+        }
+    }
+    free(buf);
+    return 0;
+}
+
+/* numpy's pairwise_sum order (8 accumulators, 128-element leaves, split
+   at n/2 rounded down to a multiple of 8), per lane */
+static vd pairwise_block(const vd* a, long n)
+{
+    long i;
+    if (n < 8) {
+        vd res = splat(0.0);
+        for (i = 0; i < n; i++) res += a[i];
+        return res;
+    }
+    if (n <= 128) {
+        vd r0 = a[0], r1 = a[1], r2 = a[2], r3 = a[3];
+        vd r4 = a[4], r5 = a[5], r6 = a[6], r7 = a[7], res;
+        for (i = 8; i < n - (n % 8); i += 8) {
+            r0 += a[i];     r1 += a[i + 1]; r2 += a[i + 2]; r3 += a[i + 3];
+            r4 += a[i + 4]; r5 += a[i + 5]; r6 += a[i + 6]; r7 += a[i + 7];
+        }
+        res = ((r0 + r1) + (r2 + r3)) + ((r4 + r5) + (r6 + r7));
+        for (; i < n; i++) res += a[i];
+        return res;
+    }
+    {
+        long n2 = n / 2;
+        n2 -= n2 % 8;
+        return pairwise_block(a, n2) + pairwise_block(a + n2, n - n2);
+    }
+}
+
+/* np.sum(x, axis=1) of a C-contiguous block, per lane: the reduction
+   starts from the identity 0.0 and takes the row in chunks of numpy's
+   buffer size (np.getbufsize()), one pairwise sum per chunk. */
+static vd row_sum_block(const vd* a, long n, long chunk)
+{
+    vd res = splat(0.0);
+    long s;
+    for (s = 0; s < n; s += chunk)
+        res += pairwise_block(a + s, n - s < chunk ? n - s : chunk);
+    return res;
+}
+
+/* np.sum(X, axis=1) for a row-major (R x n) X, in the blocked layout the
+   sweep sums in.  Returns 0 ok, -1 on alloc failure. */
+long row_sums_blk(const double* X, long n, long R, long chunk, double* out)
+{
+    vd* xt = alloc_planes(n, 1);
+    long r0;
+    if (!xt) return -1;
+    for (r0 = 0; r0 < R; r0 += MODAPE_BS) {
+        int B = (int)((R - r0 < MODAPE_BS) ? (R - r0) : MODAPE_BS), j;
+        vd s;
+        load_block(X, r0, B, n, 0.0, xt);
+        s = row_sum_block(xt, n, chunk);
+        for (j = 0; j < B; j++) out[r0 + j] = s[j];
+    }
+    free(xt);
+    return 0;
+}
+
+/* The whole V-curve lambda sweep of ws2doptv/ws2doptvp in one call.
+   lams is (nl x R): row k holds every row's k-th grid lambda.  For each
+   block of rows and each lambda in order: solve (envelope=0) or run the
+   envelope loop from the previous lambda's z (envelope=1, z starts at 0,
+   _whittaker.pyx:326-357), then write the raw sums of kernels._fit_pen:
+   fit[k*R+r] = sum((w*(y-z))^2), pen[k*R+r] = sum((diff2 z)^2), each in
+   np.sum's order.  Returns 0 ok, -1 on alloc failure. */
+long vcurve_sweep(const double* Y, const double* W, const double* lams,
+                  long nl, double p, long envelope, double* fit, double* pen,
+                  long n, long R, long chunk)
+{
+    vd* buf = alloc_planes(n, 9);
+    long r0, k, i;
+    if (!buf) return -1;
+    {
+        vd* yt  = buf;          vd* wt  = buf + n;
+        vd* zt  = buf + 2 * n;  vd* wwt = buf + 3 * n;
+        vd* wd  = buf + 4 * n;  vd* wc  = buf + 5 * n;
+        vd* we  = buf + 6 * n;  vd* znt = buf + 7 * n;
+        vd* sq  = buf + 8 * n;
+        for (r0 = 0; r0 < R; r0 += MODAPE_BS) {
+            int B = (int)((R - r0 < MODAPE_BS) ? (R - r0) : MODAPE_BS), j;
+            load_block(Y, r0, B, n, 0.0, yt);
+            load_block(W, r0, B, n, 1.0, wt);
             for (i = 0; i < n; i++) {
-                for (j = 0; j < B; j++) {
-                    yt[i*BS+j] = Y[(r0+j)*n + i];
-                    wt[i*BS+j] = W[(r0+j)*n + i];
-                    zt[i*BS+j] = z[(r0+j)*n + i];
-                    wwt[i*BS+j] = 1.0;  /* overwritten on iteration 0 */
+                zt[i] = splat(0.0);
+                wwt[i] = splat(1.0);
+            }
+            for (k = 0; k < nl; k++) {
+                vd lam = lam_block(lams + k * R, r0, B), f, q;
+                if (envelope)
+                    envelope_block(yt, wt, lam, p, zt, wwt, znt, wd, wc, we,
+                                   n, B);
+                else
+                    ws2d_block(yt, lam, wt, zt, wd, wc, we, n);
+                for (i = 0; i < n; i++) {
+                    vd r = wt[i] * (yt[i] - zt[i]);
+                    sq[i] = r * r;
                 }
-                for (j = B; j < BS; j++) {
-                    yt[i*BS+j] = 0.0; wt[i*BS+j] = 1.0; zt[i*BS+j] = 0.0;
-                    wwt[i*BS+j] = 1.0;
+                f = row_sum_block(sq, n, chunk);
+                for (i = 0; i < n - 2; i++) {
+                    vd d = (zt[i+2] - zt[i+1]) - (zt[i+1] - zt[i]);
+                    sq[i] = d * d;
+                }
+                q = row_sum_block(sq, n - 2, chunk);
+                for (j = 0; j < B; j++) {
+                    fit[k * R + r0 + j] = f[j];
+                    pen[k * R + r0 + j] = q[j];
                 }
             }
-            for (it = 0; it < 10 && n_active > 0; it++) {
-                for (i = 0; i < n; i++)
-                    for (j = 0; j < BS; j++) {
-                        double wnew = wt[i*BS+j]
-                            * (yt[i*BS+j] > zt[i*BS+j] ? p : p1);
-                        /* converged lanes retain their stopping
-                           iteration's ww (envelope_rows contract) */
-                        wwt[i*BS+j] = active[j] ? wnew : wwt[i*BS+j];
-                    }
-                ws2d_block(yt, lamv, wwt, znt, wd, wc, we, n);
-                for (j = 0; j < BS; j++) {
-                    double delta = 0.0;
-                    if (!active[j]) continue;
-                    for (i = 0; i < n; i++)
-                        delta += fabs(znt[i*BS+j] - zt[i*BS+j]);
-                    if (delta == 0.0) { active[j] = 0; n_active--; }
-                    else for (i = 0; i < n; i++) zt[i*BS+j] = znt[i*BS+j];
-                }
-            }
-            for (i = 0; i < n; i++)
-                for (j = 0; j < B; j++) {
-                    z[(r0+j)*n + i]  = zt[i*BS+j];
-                    ww[(r0+j)*n + i] = wwt[i*BS+j];
-                }
         }
     }
     free(buf);
@@ -530,13 +665,13 @@ long png_unfilter(const unsigned char* raw, long h, long w,
 }
 """
 
-# -O3 -march=native: enables auto-vectorization of the blocked solver's
-# row lanes on this host's ISA.  Exactness is NOT traded away: -fno-fast-math
-# keeps IEEE semantics, -ffp-contract=off forbids FMA merging, and SIMD
-# add/mul/div round identically to their scalar forms — per-row results are
-# bit-equal under any lane width (asserted by tests/test_ckernel.py).  The
-# .so is compiled at first use on the machine that runs it, so native is
-# always the running host's ISA.
+# -O3 -march=native: the blocked solver's GCC vector types lower to the
+# host's widest packed double ops.  Exactness is NOT traded away:
+# -fno-fast-math keeps IEEE semantics, -ffp-contract=off forbids FMA
+# merging, and packed add/mul/div round identically to their scalar forms —
+# per-row results are bit-equal under any lane width (asserted by
+# tests/test_ckernel.py).  The .so is compiled at first use on the machine
+# that runs it, so native is always the running host's ISA.
 _CFLAGS = ["-O3", "-march=native", "-fno-fast-math", "-ffp-contract=off",
            "-fPIC", "-shared"]
 
@@ -609,6 +744,14 @@ def get_lib():
         lib.envelope_rows_blk.argtypes = [dp, dp, dp, ctypes.c_double, dp, dp,
                                           ctypes.c_long, ctypes.c_long]
         lib.envelope_rows_blk.restype = ctypes.c_long
+        lib.row_sums_blk.argtypes = [dp, ctypes.c_long, ctypes.c_long,
+                                     ctypes.c_long, dp]
+        lib.row_sums_blk.restype = ctypes.c_long
+        lib.vcurve_sweep.argtypes = [dp, dp, dp, ctypes.c_long,
+                                     ctypes.c_double, ctypes.c_long, dp, dp,
+                                     ctypes.c_long, ctypes.c_long,
+                                     ctypes.c_long]
+        lib.vcurve_sweep.restype = ctypes.c_long
         lib.dod_decode_stream.argtypes = [
             ctypes.POINTER(ctypes.c_ubyte), ctypes.c_long, ctypes.c_longlong,
             ctypes.POINTER(ctypes.c_longlong), ctypes.c_long]
@@ -647,7 +790,7 @@ def _dp(a: np.ndarray):
 
 def ws2d_rows_c(Y: np.ndarray, lam: np.ndarray, W: np.ndarray,
                 Z: np.ndarray, work: np.ndarray) -> None:
-    """Blocked (row-SIMD) solve; bit-identical scalar row loop as the
+    """Blocked (8-row vector) solve; bit-identical scalar row loop as the
     fallback when the blocked form cannot allocate its transpose
     scratch."""
     lib = get_lib()
@@ -664,6 +807,26 @@ def envelope_rows_c(Y: np.ndarray, lam: np.ndarray, W: np.ndarray, p: float,
                              _dp(z), _dp(ww), n, R) != 0:
         lib.envelope_rows(_dp(Y), _dp(lam), _dp(W), ctypes.c_double(p),
                           _dp(z), _dp(ww), _dp(work), n, R)
+
+
+def vcurve_sweep_c(Y: np.ndarray, W: np.ndarray, lams: np.ndarray,
+                   p: float | None):
+    """Raw V-curve sums for every lambda row of ``lams`` (nl, R), in one
+    call: (fit, pen), each (nl, R), with fit = sum((w*(y-z))^2) and
+    pen = sum((diff2 z)^2) summed in np.sum's order.  ``p`` runs the
+    envelope loop with z carried across lambdas; None solves plainly.
+    None when the sweep cannot allocate its scratch."""
+    lib = get_lib()
+    R, n = Y.shape
+    nl = lams.shape[0]
+    fit = np.empty((nl, R))
+    pen = np.empty((nl, R))
+    if lib.vcurve_sweep(_dp(Y), _dp(W), _dp(lams), nl,
+                        ctypes.c_double(0.0 if p is None else p),
+                        0 if p is None else 1, _dp(fit), _dp(pen), n, R,
+                        np.getbufsize()) != 0:
+        return None
+    return fit, pen
 
 
 def png_unfilter_c(raw: bytes, h: int, w: int) -> np.ndarray | None:

@@ -207,7 +207,9 @@ def ws2d_batch(Y: np.ndarray, lam, W: np.ndarray,
     z[m - 1] = z[m - 1] / d[m - 1] - c[m - 1] * z[m]
     for i in range(m - 2, -1, -1):
         z[i] = z[i] / d[i] - c[i] * z[i + 1] - e[i] * z[i + 2]
-    return np.ascontiguousarray(z.T)
+    # a copy, never a view: at R == 1 z.T is already contiguous, and a view
+    # into the cached workspace would change under the next solve
+    return z.T.copy()
 
 
 def _envelope_iterate(
@@ -331,14 +333,52 @@ def _vcurve(
     return np.power(10.0, lamids[rows, k])
 
 
-def _fit_pen(Y, W, Z):
-    """log sum((w*(y-z))^2) and log sum((diff2 z)^2) per row
-    (_whittaker.pyx:253-268)."""
-    with np.errstate(divide="ignore"):
-        fits = np.log(np.sum((W * (Y - Z)) ** 2, axis=1))
-        d1 = Z[:, 1:] - Z[:, :-1]
+def _sweep_sums(
+    Y: np.ndarray, W: np.ndarray, lams: np.ndarray, p: float | None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """numpy form of ckernel.vcurve_sweep_c, its oracle and fallback: raw
+    fit and penalty sums, (nl, R) each, one lambda row of ``lams`` at a
+    time."""
+    nl, R = lams.shape
+    fit = np.empty((nl, R))
+    pen = np.empty((nl, R))
+    z = np.zeros_like(Y)
+    ww = np.empty_like(W)
+    for lix in range(nl):
+        if p is None:
+            z = ws2d_batch(Y, lams[lix], W)
+        else:
+            z, ww = _envelope_iterate(Y, lams[lix], W, p, z, ww)
+        fit[lix] = np.sum((W * (Y - z)) ** 2, axis=1)
+        d1 = z[:, 1:] - z[:, :-1]
         d2 = d1[:, 1:] - d1[:, :-1]
-        pens = np.log(np.sum(d2 * d2, axis=1))
+        pen[lix] = np.sum(d2 * d2, axis=1)
+    return fit, pen
+
+
+def _vcurve_curves(
+    Y: np.ndarray, W: np.ndarray, llas: np.ndarray, p: float | None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """log fit and log penalty, (R, nl) each, over the whole lambda grid
+    (_whittaker.pyx:253-268): fit = sum((w*(y-z))^2), penalty =
+    sum((diff2 z)^2).  With ``p`` each grid point runs the envelope loop,
+    starting from the previous grid point's z (z initialised to zero only
+    once, _whittaker.pyx:326-335); without it each point is one solve.
+    The compiled path sweeps the whole grid in one C call.
+    """
+    R = Y.shape[0]
+    nl = llas.shape[-1]
+    lams = np.empty((nl, R))
+    for lix in range(nl):
+        lams[lix] = 10.0 ** llas[:, lix] if llas.ndim == 2 else 10.0 ** llas[lix]
+    sums = _ck.vcurve_sweep_c(Y, W, lams, p) if _ck.get_lib() is not None else None
+    fit, pen = sums if sums is not None else _sweep_sums(Y, W, lams, p)
+    fits = np.empty((R, nl))
+    pens = np.empty((R, nl))
+    with np.errstate(divide="ignore"):
+        for lix in range(nl):
+            fits[:, lix] = np.log(fit[lix])
+            pens[:, lix] = np.log(pen[lix])
     return fits, pens
 
 
@@ -359,15 +399,7 @@ def ws2doptv_batch(
     Y = np.ascontiguousarray(Y, dtype=np.float64)
     W = np.ascontiguousarray(W, dtype=np.float64)
     llas = np.asarray(llas, dtype=np.float64)
-    R, n = Y.shape
-    per_row = llas.ndim == 2
-    nl = llas.shape[-1]
-    fits = np.empty((R, nl))
-    pens = np.empty((R, nl))
-    for lix in range(nl):
-        lam = 10.0 ** llas[:, lix] if per_row else 10.0 ** llas[lix]
-        Z = ws2d_batch(Y, lam, W)
-        fits[:, lix], pens[:, lix] = _fit_pen(Y, W, Z)
+    fits, pens = _vcurve_curves(Y, W, llas, None)
     lopt = _vcurve(fits, pens, llas, valid)
     Z = ws2d_batch(Y, lopt, W)
     return Z, lopt
@@ -395,19 +427,8 @@ def ws2doptvp_batch(
     Y = np.ascontiguousarray(Y, dtype=np.float64)
     W = np.ascontiguousarray(W, dtype=np.float64)
     llas = np.asarray(llas, dtype=np.float64)
-    R, n = Y.shape
-    per_row = llas.ndim == 2
-    nl = llas.shape[-1]
-    fits = np.empty((R, nl))
-    pens = np.empty((R, nl))
-    z = np.zeros_like(Y)
-    ww = np.empty_like(W)
-    for lix in range(nl):
-        lam = 10.0 ** llas[:, lix] if per_row else np.full(R, 10.0 ** llas[lix])
-        z, ww = _envelope_iterate(Y, lam, W, p, z, ww)
-        fits[:, lix], pens[:, lix] = _fit_pen(Y, W, z)
+    fits, pens = _vcurve_curves(Y, W, llas, p)
     lopt = _vcurve(fits, pens, llas, valid)
-    z0 = np.zeros_like(Y)
-    _, ww = _envelope_iterate(Y, lopt, W, p, z0, ww)
+    _, ww = _envelope_iterate(Y, lopt, W, p, np.zeros_like(Y), None)
     Z = ws2d_batch(Y, lopt, ww)
     return Z, lopt

@@ -1091,8 +1091,8 @@ def update_tier_compact(spark: SparkSession, tier_dir: str, tier: str,
                 "use merge_tier_tail on the plain tier")
             vals, ooffs = decode_dod_rows(data, boffs)
             tails = tail_a.take(take).to_pylist()
-            totals = batch.column(names.index("_total")) \
-                .to_numpy(zero_copy_only=False).astype(np.int64)[idx]
+            totals = _matched_int64(batch.column(names.index("_total")),
+                                    take)
             # splice each matched row, grouped by NEW length so the C
             # encoder gets same-length 2-D blocks
             groups: dict[int, tuple[list[int], list[np.ndarray]]] = {}
@@ -1171,6 +1171,14 @@ def update_tier_compact(spark: SparkSession, tier_dir: str, tier: str,
             yield pa.RecordBatch.from_arrays(cols, names=keep)
 
     return joined.mapInArrow(_splice, out_schema)
+
+
+def _matched_int64(col, take) -> np.ndarray:
+    """int64 values of the Arrow integer column ``col`` at the matched rows
+    ``take``.  The splice's full outer join leaves the tail columns null on
+    unmatched rows, and ``to_numpy`` turns those nulls into NaN: take the
+    matched rows first, so no NaN ever reaches the int64 cast."""
+    return col.take(take).to_numpy(zero_copy_only=False).astype(np.int64)
 
 
 def apply_tier_compact_update(spark: SparkSession, tier_dir: str, tier: str,

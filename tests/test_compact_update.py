@@ -24,6 +24,7 @@ from modape_spark.incremental import (
 from modape_spark.rollup import SmoothConfig
 from modape_spark.sources.sequences import sequences_df
 from modape_spark.tiers import (
+    _matched_int64,
     apply_tier_compact_update,
     materialize_rollup,
     read_tier_compact,
@@ -121,6 +122,22 @@ def test_unmatched_rows_pass_through(spark, state):
         else:
             assert bytes(r["dekad_dod"]) != before[r["doc_id"]][0] or \
                 r["dekad_total"] == before[r["doc_id"]][2]
+
+
+def test_matched_int64_casts_only_matched_rows():
+    """Unmatched rows carry a null ``_total``; casting the whole column
+    before selecting the matched rows cast NaN to int64 (undefined, and a
+    RuntimeWarning on every forward update)."""
+    import warnings
+
+    import pyarrow as pa
+
+    col = pa.array([742, None, 745, None], type=pa.int32())
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = _matched_int64(col, pa.array([0, 2]))
+    assert got.dtype == np.int64
+    assert got.tolist() == [742, 745]
 
 
 def test_apply_write_back_and_sidecar(spark, state):

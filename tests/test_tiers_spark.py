@@ -65,6 +65,40 @@ def test_source_generation_matches_local(spark):
         assert np.array_equal(np.array(row["tokens"]), exp["tokens"].iloc[i])
 
 
+def test_tokens_fit_int16_with_exact_sentinel(spark):
+    """Every generated token is in the VIM valid range [-2000, 10000] or
+    is the -3000 nodata sentinel, so the smallint ``tokens`` column holds
+    each value exactly and the kernel's float nodata test still matches
+    the sentinel after the round trip through int16."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import ShortType
+
+    from modape_spark.constants import NODATA
+    from modape_spark.fixtures import LENGTHS, gen_tokens_block
+
+    assert float(np.int16(NODATA)) == NODATA
+    ids = np.arange(2000, dtype=np.int64)
+    for n in LENGTHS:
+        block = gen_tokens_block(ids, n)
+        in_range = (block >= -2000) & (block <= 10000)
+        assert (in_range | (block == NODATA)).all(), n
+        assert (block == NODATA).any(), n
+        assert np.array_equal(block.astype(np.int16), block), n
+
+    rows = 400
+    df = sequences_df(spark, rows, partitions=3)
+    assert df.schema["tokens"].dataType.elementType == ShortType()
+    t = F.col("t")
+    got = df.select(F.explode("tokens").alias("t")).agg(
+        F.count(F.when(t == int(NODATA), 1)).alias("sentinel"),
+        F.count(F.when((t != int(NODATA)) & ((t < -2000) | (t > 10000)),
+                       1)).alias("outside"),
+    ).collect()[0]
+    local = np.concatenate(list(sequences_local_pandas(rows)["tokens"]))
+    assert got["outside"] == 0
+    assert got["sentinel"] == int((local == NODATA).sum()) > 0
+
+
 def test_partition_count_invariance(spark):
     a = sequences_df(spark, 40, partitions=2).orderBy("doc_id").collect()
     b = sequences_df(spark, 40, partitions=11).orderBy("doc_id").collect()
